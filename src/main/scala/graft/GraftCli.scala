@@ -73,8 +73,7 @@ object GraftCli {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: GraftCli <root> <command> [args...]")
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-cli")
+    val spark = GraftSession.local(appName = "graft-cli")
     try run(spark, args.head, args(1), args.drop(2))
     finally spark.stop()
   }

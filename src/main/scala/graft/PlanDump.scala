@@ -21,15 +21,7 @@ object PlanDump {
     val names =
       if (args.length > 3) args.drop(3).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(appName = "plan-dump")
     Files.createDirectories(Paths.get(outDir))
     var failed = 0
     names.foreach { name =>
@@ -39,7 +31,7 @@ object PlanDump {
         val df = fn(spark, sfDir)
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        val header = s"== $name @ $sfDir (local[$cpus]) ==\n"
+        val header = s"== $name @ $sfDir (${spark.sparkContext.master}) ==\n"
         Files.write(Paths.get(outDir, s"${name}_$suffix.txt"),
           (header + txt).getBytes(StandardCharsets.UTF_8))
         System.err.println(s"[plandump] wrote $name")

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.core.GraftSession
 import graft.queries.{AnnQueries, DedupQueries, ExtendedRelationalQueries, ExtensionQueries, FunctionQueries, LlmQueries, PipelineQueries, MultimodalQueries, ReferenceQueries, SqlSurfaceQueries, TextQueries}
 import graft.streaming.StreamingQueries
 
@@ -22,14 +23,22 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ReferenceQueries.r5GroupCount(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * activates the session it is given (a no-op on factory sessions),
+    * so the graft functions and planner strategy are there on a session
+    * the driver built. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ReferenceQueries.queries ++ ExtensionQueries.queries ++
+    (ReferenceQueries.queries ++ ExtensionQueries.queries ++
       LlmQueries.queries ++ StreamingQueries.queries ++
       TextQueries.queries ++ DedupQueries.queries ++
       AnnQueries.queries ++ MultimodalQueries.queries ++
       ExtendedRelationalQueries.queries ++ FunctionQueries.queries ++
-      PipelineQueries.queries ++ SqlSurfaceQueries.queries
+      PipelineQueries.queries ++ SqlSurfaceQueries.queries).map { case (name, fn) =>
+      name -> { (spark: SparkSession, dir: String) =>
+        GraftSession.activate(spark)
+        fn(spark, dir)
+      }
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -69,22 +69,3 @@ object Tables {
   def registerAll(spark: SparkSession, sfDir: String): Unit =
     names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }
-
-/** Session factory with the settings every entry point shares.
-  * local[N] for tests; on a real cluster the master/memory flags come
-  * from spark-submit and everything else here still applies.
-  */
-object GraftSession {
-  def local(cores: Int = 4, appName: String = "graft"): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-}

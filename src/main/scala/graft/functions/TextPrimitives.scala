@@ -15,7 +15,8 @@ object TextPrimitives {
   val P: Long = 1000000007L
 
   /** Spark SQL: rolling hash of string expression `g` — the codegen
-    * [[PolyHash]] expression (requires [[GraftFunctions.register]]).
+    * [[PolyHash]] expression (on a session activated by
+    * [[graft.core.GraftSession.activate]]).
     * Identical integer math to [[rollingHashSparkBuiltin]]. */
   def rollingHashSpark(g: String): String = s"poly_hash($g)"
 

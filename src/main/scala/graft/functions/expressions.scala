@@ -1515,9 +1515,9 @@ object BpeApplyCount {
   }
 }
 
-/** SQL registration so the spark.sql-built queries can call the codegen
-  * expressions by name. Idempotent; call before any spark.sql text that
-  * references them. */
+/** The SQL function table: the names the spark.sql-built queries call
+  * the codegen expressions by. Sessions get it through
+  * [[graft.core.GraftSession.activate]]. */
 object GraftFunctions {
   private def litInt(e: Expression, fn: String): Int = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _)  => v
@@ -1526,7 +1526,7 @@ object GraftFunctions {
       s"$fn expects an integer literal argument, got $other")
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+  private[graft] def install(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     reg.createOrReplaceTempFunction("poly_hash", exprs => PolyHash(exprs.head), "scala_udf")
     reg.createOrReplaceTempFunction("simhash30", exprs => SimHash30(exprs.head), "scala_udf")

@@ -23,10 +23,10 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * of the fact table and a streaming pass over it.
   *
   * Wiring: [[TopKPerKey]] is the logical node, [[TopKPerKeyStrategy]]
-  * plans it (registered via `spark.experimental.extraStrategies` on
-  * first use, or through GraftExtensions), and the final exec node
-  * declares `ClusteredDistribution(keys)` so Catalyst inserts the hash
-  * shuffle — partitioning stays the planner's job, only the
+  * plans it (installed by [[graft.core.GraftSession.activate]]; a
+  * session that was not activated cannot plan the node), and the final
+  * exec node declares `ClusteredDistribution(keys)` so Catalyst inserts
+  * the hash shuffle — partitioning stays the planner's job, only the
   * per-partition algorithm is custom.
   *
   * Top-k sets merge (top-k of a union = top-k of the per-part top-ks),
@@ -117,8 +117,7 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
                 s"TopKPerKeyExec exceeded ${TopK.maxGroupsKey}=$maxGroups distinct " +
                   "groups in one partition; this input's group cardinality is out of " +
                   "the heap operator's regime — use TopK.windowed (sort-based, " +
-                  "spillable), raise the limit, or (if this plan came from the " +
-                  s"automatic rank-limit rewrite) set ${TopK.autoRewriteKey}=false")
+                  "spillable) or raise the limit")
             } else {
               val h = mutable.PriorityQueue.empty[InternalRow](ordering)
               h.enqueue(row.copy())
@@ -160,9 +159,6 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
 object TopK {
   val maxGroupsKey = "spark.graft.topk.maxGroupsPerPartition"
   val maxGroupsDefault = 4000000L
-  /** Alias of [[RewriteRankLimitToTopK.enabledKey]] (referenced from the
-    * exec's error message without a forward dependency). */
-  val autoRewriteKey = "spark.graft.topk.autoRewrite"
 
   def perKey(df: DataFrame, keys: Seq[Column], order: Seq[Column], k: Int,
              groupsHint: Option[Long] = None): DataFrame = {
@@ -174,10 +170,6 @@ object TopK {
     // groups ~evenly — compare the per-partition expectation
     val parts = math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
     if (groupsHint.exists(h => h / parts > threshold)) return windowed(df, keys, order, k)
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-    }
     val sortOrder = order.map(GraftShims.expressionEager(_) match {
       case so: SortOrder => so
       case e => SortOrder(e, Ascending)

@@ -1010,7 +1010,6 @@ object AnnQueries {
     * scan-and-score spelling here is the batch baseline that builds
     * and validates that index. */
   def s13Bm25TopK(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
     val w = "split(text, ' ')"
     val tfs = bm25Terms.map(t =>
@@ -1047,7 +1046,6 @@ object AnnQueries {
     * then run over ≤ 20-row lists — driver-trivial regardless of
     * corpus size. */
   def s14HybridRrf(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
     Tables.load(spark, dir, "embeddings").createOrReplaceTempView("embeddings")
     val w = "split(text, ' ')"

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.Tables
-import graft.functions.GraftFunctions
 import graft.functions.TextPrimitives._
 
 /** Near-duplicate detection suite for the training-data pipeline:
@@ -163,7 +162,6 @@ object DedupQueries {
     * table reads it directly, so registration stays session-side even
     * when the pair manifests themselves are stored-artifact reads. */
   private[queries] def registerIds(spark: SparkSession, dir: String): Unit = {
-    GraftFunctions.register(spark)
     // deliberately NOT loadSpread: the ids table is persisted right
     // after the shingle kernel, and measured at sf0.1 the extra
     // round-robin shuffle + 32-partition cache materialization costs
@@ -250,7 +248,6 @@ object DedupQueries {
     * d14's merged clustering re-consumes them, and the prefix-filter
     * join now runs once per corpus fingerprint, not once per JVM. */
   private[queries] def containmentPairs(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
     spark.sql(s"WITH $idsCteSpark SELECT * FROM ids")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -433,7 +430,6 @@ object DedupQueries {
     * keep the never-all-pairs shape pinned on the plan that actually
     * mines. */
   private[graft] def containmentPairsPlan(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
     // the mining WITH chain references ids four times (ex feeds df and
     // cand, plus both verify sides) — a SQL-WITH consumer, so a lazy
@@ -597,7 +593,6 @@ object DedupQueries {
     * variant-collapse case (which the generated corpus lacks) is
     * asserted in DedupClusterSpec. */
   def d15NormalizedExact(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.loadSpread(spark, dir, "documents").createOrReplaceTempView("documents")
     spark.sql("""
       SELECT MIN(doc_id) AS doc_id, COUNT(*) AS n_copies
@@ -687,7 +682,6 @@ object DedupQueries {
     * (amortized exactly like d1's persisted ids); intra-batch dedup
     * composes by running l1/d1 over the accepted set afterwards. */
   def d6IncrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     // plain load, not loadSpread — the materialization barrier right
     // below is what parallelism would buy, and the single-task shingle
     // kernel measured cheaper than a spread's extra shuffle (d1's
@@ -750,7 +744,6 @@ object DedupQueries {
     * a span boilerplate. Docs under 5 tokens have no spans and are
     * excluded by both dialects. */
   def d9SpanDedup(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.loadSpread(spark, dir, "documents").createOrReplaceTempView("documents")
     // round 11: the duplicated positions come from the STORED mask
     // manifest ([[spanMask]]) — n_spans is a per-row expression on the
@@ -794,7 +787,6 @@ object DedupQueries {
     * implication in the output demonstrates row by row. */
   def d10BloomDedup(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    GraftFunctions.register(spark)
     Tables.load(spark, dir, "events").createOrReplaceTempView("events")
     // coalesce BEFORE concatenation: concat_ws would silently drop a
     // NULL event_type (hashing a shorter string) where the oracle's ||
@@ -837,7 +829,6 @@ object DedupQueries {
     * The detection shuffles only (id, pos, hash) rows; text never
     * moves; all stored cells are longs. */
   private def spanMask(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val fp = graft.core.ArtifactStore.fingerprint(dir, Seq("documents.parquet"),
       Seq("d11mask=v1:gram=5"))
     graft.core.ArtifactStore.getOrBuild(spark, "d11_mask_v1", fp, dir, d11MaskBuilds) { _ =>
@@ -883,7 +874,6 @@ object DedupQueries {
     * column has one consistent definition. Oracle: the mask rule
     * restated over DuckDB's unnest + NOT EXISTS interval test. */
   def d12SpanCut(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.loadSpread(spark, dir, "documents").createOrReplaceTempView("documents")
     // the STORED mask manifest (round 11) — the cut job reads the
     // artifact instead of re-running the detection; the mask view's

@@ -181,7 +181,6 @@ object LlmQueries {
     * boolean. Docs under 3 tokens have no 3-grams and are clean by
     * definition on both engines. */
   def l9Decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.loadSpread(spark, dir, "documents").createOrReplaceTempView("documents")
     // shingle kernel INLINE in the explodes (round 18): with ids as a
     // projected column, InferFiltersFromGenerate + pushdown re-ran the
@@ -238,7 +237,6 @@ object LlmQueries {
     * sums with one division at the end, so the 6dp round is cosmetic,
     * not load-bearing. */
   def l15DataCard(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
     // fp behind a one-row explode barrier: the d⋈fpc join-key
     // constraint infers isnotnull(fp) and substitutes the poly_hash
@@ -331,7 +329,6 @@ object LlmQueries {
   }
 
   def l16CurriculumSample(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
     spark.sql(s"""
       WITH ${curriculumCtes(sparkDialect = true)}
@@ -403,7 +400,6 @@ object LlmQueries {
     * leak into the hash. Scan-shaped: one fused per-row loop, no
     * shuffle but the presentation sort. */
   def l13Quantize(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "embeddings").createOrReplaceTempView("embeddings")
     spark.sql("""
       SELECT vec_id, q.scale AS scale, q.q_sum AS q_sum,
@@ -432,7 +428,6 @@ object LlmQueries {
     * under 3 tokens have no 3-grams and are excluded identically on
     * both engines. */
   def l14LmScore(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.loadSpread(spark, dir, "documents").createOrReplaceTempView("documents")
     // shingle kernel INLINE in the explodes (round 18, the l9/s3
     // recipe); n_types is recovered as COUNT(*) after the left join —
@@ -476,7 +471,6 @@ object LlmQueries {
     * (25–250 docs/source). */
   def l17DomainCap(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    graft.functions.GraftFunctions.register(spark)
     Tables.loadSpread(spark, dir, "documents").createOrReplaceTempView("documents")
     val scored = spark.sql(
       s"WITH ${TextQueries.qualityCteSpark} SELECT doc_id, source, score FROM scored")
@@ -546,7 +540,6 @@ object LlmQueries {
     * fingerprint a fused kernel — no shuffle before the presentation
     * sort; at 100 TB this runs at scan speed like t1–t9. */
   def l23RepeatCollapse(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
     spark.sql(s"""
       WITH t AS (SELECT doc_id, filter(split(text, ' '), w -> w <> '') AS w FROM documents),
@@ -579,7 +572,6 @@ object LlmQueries {
     * column never shuffles. */
   def l20WeightedSample(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    graft.functions.GraftFunctions.register(spark)
     Tables.loadSpread(spark, dir, "documents").createOrReplaceTempView("documents")
     val prioritized = spark.sql(s"""
       WITH ${TextQueries.qualityCteSpark}
@@ -661,7 +653,6 @@ object LlmQueries {
     s"CAST((${FunctionQueries.kmvHashDuck(id)}) % 8 AS BIGINT) AS shard"
 
   def l18SubwordPack(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents")
       .selectExpr("doc_id",
         "subword_count(lower(text)) AS n_tokens",

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.Tables
-import graft.functions.GraftFunctions
 import graft.functions.TextPrimitives._
 
 /** p1 — the end-to-end training-data pipeline the individual operators
@@ -18,7 +17,6 @@ object PipelineQueries {
   private val qualityThreshold = "0.5"
 
   def p1TrainingPipeline(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
     // Each per-row kernel (split, stop_hits, the rounded score with its
     // regexp_replace pass) sits behind a one-row explode barrier:
@@ -76,7 +74,6 @@ object PipelineQueries {
     * and only the final rollup (sources × 3 strata) aggregates — the
     * report is the biggest thing built after the scans. */
   def p4CorpusRelease(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
     spark.sql(s"""
       WITH ${LlmQueries.curriculumCtes(sparkDialect = true)},
@@ -104,7 +101,6 @@ object PipelineQueries {
   }
 
   def p3CurationPipeline(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
     spark.sql(s"""
       WITH survivors AS (SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY text),
@@ -163,7 +159,6 @@ object PipelineQueries {
     * composition carries ids. */
   def p5RefreshPacks(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
     val scored = spark.sql(s"""
       WITH survivors AS (SELECT MIN(doc_id) AS doc_id FROM (

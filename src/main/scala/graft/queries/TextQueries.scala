@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.Tables
-import graft.functions.GraftFunctions
 import graft.functions.TextPrimitives._
 
 /** Text-analysis operators for the training-data pipeline (north star):
@@ -18,7 +17,6 @@ import graft.functions.TextPrimitives._
 object TextQueries {
 
   private def docs(spark: SparkSession, dir: String): Unit = {
-    GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
   }
 

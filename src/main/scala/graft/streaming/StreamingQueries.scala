@@ -945,24 +945,15 @@ object StreamingQueries {
     * same scale rule a production ingest applies (state partitions ∝
     * rows/trigger): min(cores, 16) spreads the state work across the
     * box while the extra per-store commit cost stays amortized by the
-    * big batches; conf-overridable for deployments
-    * (`spark.graft.streaming.throughputPartitions`). Partition count
-    * cannot change the result — keyed dedup is partition-independent
-    * and the sink aggregates per type. Measured quiet at sf0.1
+    * big batches. Partition count cannot change the result — keyed
+    * dedup is partition-independent and the sink aggregates per type.
+    * Measured quiet at sf0.1
     * (isolated bench line, min of two passes): 4-wide 4.95 s at
     * 155–214 k rows/s through the dedup state → 16-wide 3.54–3.76 s at
     * 372–423 k rows/s (trigger time 4.7 → 2.4 s; the residual line is
     * the feed-build + per-trigger floor the demo feeds measure). */
   private def throughputPartitions(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.streaming.throughputPartitions") match {
-      case Some(v) =>
-        val n = v.toIntOption.getOrElse(sys.error(
-          s"spark.graft.streaming.throughputPartitions must be a positive int, got '$v'"))
-        require(n > 0,
-          s"spark.graft.streaming.throughputPartitions must be > 0, got $n")
-        n
-      case None => math.min(16, spark.sparkContext.defaultParallelism)
-    }
+    math.min(16, spark.sparkContext.defaultParallelism)
 
   def x51StreamThroughput(spark: SparkSession, dir: String): DataFrame =
       withShufflePartitions(spark, throughputPartitions(spark)) {
@@ -1035,9 +1026,8 @@ object StreamingQueries {
     * dedup plus the stateless codegen curation stages. Factored out so
     * the chaos-recovery spec can drive this exact definition through a
     * restartable file sink (the memory-sink variant below is the
-    * oracle-checked one). Callers must have [[graft.functions
-    * .GraftFunctions.register]]ed on the session (poly_hash,
-    * stop_hits). */
+    * oracle-checked one). The session must be activated by
+    * [[graft.core.GraftSession.activate]] (poly_hash, stop_hits). */
   def p2Transform(stream: DataFrame): DataFrame = {
     import graft.functions.TextPrimitives._
     val w = "split(text, ' ')"
@@ -1058,7 +1048,6 @@ object StreamingQueries {
 
   def p2StreamPipeline(spark: SparkSession, dir: String): DataFrame =
       withShufflePartitions(spark, 4) {
-    graft.functions.GraftFunctions.register(spark)
     val feed = docFeedFor(spark, dir)
     val tmp = Files.createTempDirectory("graft_p2").toString
     val schema = spark.read.parquet(feed).schema

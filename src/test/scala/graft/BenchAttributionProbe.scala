@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Attribution probe for the round-13 bench movers (VERDICT r13 #3):
   * m5_image_decode read 2.30× (0.40→0.93 s) and p8_index_refresh
   * 1.67× (0.92→1.53 s) in the archived wiped-store run against a
@@ -19,14 +17,7 @@ object BenchAttributionProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val iters = if (args.length > 1) args(1).toInt else 6
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(32, "bench-attribution-probe")
     def gcMs: Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Does a query's persist/checkpoint of a multiply-referenced relation
   * actually reach the consuming plan, or silently re-derive? Round 13
   * found x65/x70's persist+temp-view pattern NEVER substituting (the
@@ -19,14 +17,7 @@ object CacheHitProbe {
       if (args.length > 1 && args(1) == "ALL") SparkEntry.queries.keys.toSeq.sorted
       else if (args.length > 1) args.drop(1).toSeq
       else Seq("x65_pagerank", "x70_triangle_count")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(8, "cache-hit-probe")
     // isolated artifact store: plan probing must not publish into (or
     // read from) the session-default store another run relies on
     spark.conf.set("spark.graft.artifacts.dir",

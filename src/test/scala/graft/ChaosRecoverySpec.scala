@@ -105,10 +105,8 @@ class ChaosRecoverySpec extends AnyFunSuite with SparkSuite {
 
   import org.apache.spark.sql.streaming.Trigger
 
-  private lazy val p2Feed: String = {
-    graft.functions.GraftFunctions.register(spark)
+  private lazy val p2Feed: String =
     graft.streaming.StreamingQueries.docFeedFor(spark, "/root/testdata/sf0.01")
-  }
 
   private def startP2(out: String, ckpt: String, trigger: Trigger) = {
     val schema = spark.read.parquet(p2Feed).schema

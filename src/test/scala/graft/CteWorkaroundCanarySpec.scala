@@ -59,6 +59,8 @@ object CteCanaryRunner {
         spark.sql("WITH a AS (SELECT doc_id, v FROM ids) SELECT doc_id AS i FROM a")
           .createOrReplaceTempView("canary_pairs")
       } else {
+        // the graft-shaped spelling below calls minhash16
+        graft.core.GraftSession.activate(spark)
         val pairs = DedupQueries.resemblancePairsPlan(spark, sfDir)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         pairs.createOrReplaceTempView("canary_pairs")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Attribution probe for the x65/x70 bench variance (round 13): the
   * driver board showed x70 3.09 → 3.59 across r11/r12 and local runs
   * span 3.9–6.4 s — pass2 sometimes SLOWER than pass1 on an idle box.
@@ -16,14 +14,8 @@ object GraphBenchProbe {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val iters = if (args.length > 1) args(1).toInt else 6
     val aqe = sys.env.getOrElse("PROBE_AQE", "true")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(32, "graph-bench-probe")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
     def gcMs: Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans

@@ -132,6 +132,30 @@ class RainStormJobSpec extends AnyFunSuite with SparkSuite {
       Seq("1001,Stop", "1003,Speed", "1004,Stop2", "1005,Warn", "1006,Warn2"))
   }
 
+  test("exec ABI: a substring-filter script == native filter_contains, batch and streaming") {
+    // op1_t1's semantics (FIXTURES §3.1, case-sensitive substring keep)
+    // as a shell script: the batch arrives as argv[1], lines on stdout
+    val script = tmpDir("rs_ops").resolve("op1_t1.sh")
+    Files.write(script,
+      "#!/bin/sh\nprintf '%s\\n' \"$1\" | grep -F Punched || true\n".getBytes)
+    script.toFile.setExecutable(true)
+    val src = tmpDir("rs_esrc")
+    Files.write(src.resolve("signs.txt"), rows.mkString("\n").getBytes)
+    def run(op1: String, streaming: Boolean): Seq[String] = {
+      val dest = tmpDir("rs_edest").toString + "/out"
+      if (streaming)
+        RainStormJob.runStreamingToCompletion(spark, op1, "project:2,3", src.toString, dest)
+      else
+        RainStormJob.runBatch(spark, op1, "project:2,3",
+          src.toString + "/signs.txt", dest, numTasks = 3)
+      readLines(dest).sorted
+    }
+    val native = run("filter_contains:Punched", streaming = false)
+    assert(native == Seq("1001,Stop", "1003,Speed", "1004,Stop2", "1005,Warn", "1006,Warn2"))
+    assert(run(s"exec:$script", streaming = false) == native)
+    assert(run(s"exec:$script", streaming = true) == native)
+  }
+
   test("property: byteBoundedBatches is a partition of its input within bounds") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     import graft.operators.PipeOps

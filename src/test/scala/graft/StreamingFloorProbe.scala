@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -32,14 +32,7 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamingFloorProbe {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(32, "streaming-floor-probe")
     // mirror StreamingQueries.withShufflePartitions exactly
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
